@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: dumps the formatted physical plan of every SparkEntry
@@ -9,16 +8,21 @@ import org.apache.spark.sql.execution.ExplainMode
   * WholeStageCodegen spans can be reviewed. `sbt "runMain graft.Explain
   * [sfDir] [out.md]"`. */
 object Explain {
+  /** Plans can embed raw control bytes in expression literals (the ustar
+    * NUL padding in mm_tar_shards' concat tree turned the whole file
+    * "binary" for grep/diff); render them as escapes so a plan artifact
+    * stays a text file. */
+  def printable(plan: String): String = plan.map {
+    case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
+    case c => f"\\x${c.toInt}%02x"
+  }.mkString
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 4 cores, not Harness.cores: plan text (hashpartitioning(…, 4)) must
+    // not depend on the host that regenerates it.
+    val spark = Harness.session(4)
     val sb = new StringBuilder
     sb.append(s"# Physical plans (sf dir: $sfDir)\n\n")
     sb.append("Audit artifact — regenerate with `sbt \"runMain graft.Explain\"`.\n")
@@ -68,15 +72,7 @@ object Explain {
     } else {
       sb.append(s"\n(scale-audit section skipped: no sf0.1 sibling of $sfDir)\n")
     }
-    // Plans can embed raw control bytes in expression literals (the ustar
-    // NUL padding in mm_tar_shards' concat tree turned the whole file
-    // "binary" for grep/diff); render them as escapes so the artifact
-    // stays a text file.
-    val text = sb.toString.map {
-      case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
-      case c => f"\\x${c.toInt}%02x"
-    }.mkString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), text)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), printable(sb.toString))
     println(s"wrote $out")
     spark.stop()
   }

@@ -1687,10 +1687,10 @@ object SparkEntry {
     // corpus-sized stage) feeds the SAME Q×C-bounded re-rank frames.
     // IVF candidates are approximate, so the gate is per-query
     // containment of the IVF-MMR picks in the brute-force-MMR picks
-    // (the ann_ivf_recall convention; RecallProbe measured per-query
-    // 6–8 of 8 at sf0.01 and 5–8 at sf0.1 → floor 4). The left join
-    // (not left_semi + groupBy) keeps a row for a 0-hit query, so a
-    // recall collapse turns the gate red instead of dropping the row.
+    // (the ann_ivf_recall convention; measured per-query 6–8 of 8 at
+    // sf0.01 and 5–8 at sf0.1 → floor 4: SURVEY.md ann_mmr_ivf, 2abae4a).
+    // The left join (not left_semi + groupBy) keeps a row for a 0-hit
+    // query, so a recall collapse turns the gate red, not the row absent.
     "ann_mmr_ivf" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 8)
@@ -3968,9 +3968,9 @@ object SparkEntry {
   // (graph_cc_twostars, graph_bipartite) measured +11 %/+25 % with the
   // skip and keep the default: this cached frame is 32-partitioned, so
   // without the dedup's AQE-sized exchange the closure's round-0
-  // checkpoint lands as 32/96 fixture-tiny partitions (PartProbe: 96 vs
-  // 1 on the bipartite union) and the per-round scheduling overhead
-  // outweighs the saved shuffle at the measured scale (r16 receipt).
+  // checkpoint lands as 32/96 fixture-tiny partitions (96 vs 1 on the
+  // bipartite union) and the per-round scheduling overhead outweighs the
+  // saved shuffle at the measured scale (OPTIMIZATION_r16.md §9).
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     coPurchaseWeighted(s, dir)
       .select(col("a"), col("b"))

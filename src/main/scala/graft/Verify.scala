@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.{jsonString => q}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -27,14 +27,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
     // Dev-only narrowing (comma-separated query names); driver never sets
     // it — mirrors Bench's SPARK_GRAFT_BENCH_ONLY. oracle_sql.json is
@@ -92,18 +85,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -1358,8 +1358,8 @@ object Dedup {
     // 64 KB generated-method limit, so Spark logs "Failed to compile …
     // Code grows beyond 64 KB" and falls back to interpreted eval FOR
     // THIS PROJECTION ONLY. That is accounted for in the receipts: the
-    // 30.7 → 20.6 s same-host win and the 100× ScaleProbe ratio (4.2 on
-    // 100× data) both include the fallback, and the frame it evaluates
+    // 30.7 → 20.6 s same-host win and the 4.2 ratio on 100× data (SCALE.md,
+    // round-15 receipts) both include the fallback; the frame it evaluates
     // is the pruned duplicated-region footprint (member positions), never
     // the corpus — interpreted md5 there is bounded by dup density, not
     // data size. Chunking the array across separate selects does not

@@ -1,10 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Offline per-job profiler for one SparkEntry query — NOT part of the
-  * gated surface (the ScaleProbe discipline). A cold query's wall time
+  * gated surface: nothing gates on its output, and the numbers it gave
+  * live in the committed notes that cite it (BASELINE.md's r15 perf
+  * pass, OPTIMIZATION_r15.md). A cold query's wall time
   * splits into (a) executed job time (Σ per-job wall) and (b) the
   * driver-side gap — Catalyst analysis/optimization and whole-stage
   * codegen compilation, which job timing never shows. The r14 perf pass
@@ -12,22 +13,14 @@ import org.apache.spark.sql.SparkSession
   * (big gap) or fewer/cheaper jobs (big Σ).
   *
   * Usage: runMain graft.tools.Prof <queryName>[,<queryName>…] [sfDir] [runs]
+  * on `local[SPARK_GRAFT_CPUS]`, the same session Bench times on.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cores)
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // session warmup
     val jobs = new scala.collection.mutable.ArrayBuffer[(Int, Long, Long, String)]
     val starts = new scala.collection.concurrent.TrieMap[Int, (Long, String)]

@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session: one per suite, UTC, small shuffle width. */
+/** Shared local session (the Harness one): UTC, small shuffle width. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 4 cores whatever SPARK_GRAFT_CPUS says: specs pin partition-count-
+  // dependent plan shapes at this width.
+  lazy val spark: SparkSession = Harness.session(4)
 
   val sfDir = "/root/testdata/sf0.001"
 
